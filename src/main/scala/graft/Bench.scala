@@ -787,16 +787,17 @@ object Bench {
     // ~2000-char stdout TAIL — r19's line head-truncated into
     // parsed:null and the round lost its official perf comparison.
     // Write the full line (compact first — line 1 parses standalone —
-    // then the detail line) to files as well, best-effort: stdout
-    // stays the contract, the files are the recovery path.
-    for (p <- Seq("bench_out.json", "/tmp/graft_bench_line.json")) {
-      try {
-        val w = new java.io.PrintWriter(new java.io.File(p), "UTF-8")
-        try { w.println(compactLine); w.println(detailLine) }
-        finally w.close()
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] could not write $p: ${e.getMessage}")
-      }
+    // then the detail line) to bench_out.json as well, best-effort:
+    // stdout stays the contract, the file is the recovery path. Only
+    // the working directory: a fixed name under a shared, world-
+    // writable directory could be pre-planted or read by other users.
+    val p = "bench_out.json"
+    try {
+      val w = new java.io.PrintWriter(new java.io.File(p), "UTF-8")
+      try { w.println(compactLine); w.println(detailLine) }
+      finally w.close()
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] could not write $p: ${e.getMessage}")
     }
     spark.stop()
   }

@@ -14,12 +14,6 @@ import graft.functions.Text
   */
 object Corpus {
 
-  /** Release-on-exit bracket for the operators' internal persists
-    * ([[trainingMix]]'s budget-survivor frame) — the corpus-family
-    * analog of [[Dedup.cached]]. Results must be consumed inside the
-    * bracket. */
-  def cached[T](body: => T): T = CacheTracker.scoped(body)
-
   /** Deterministic pseudo-uniform bucket in [0, 2^20) from a doc id —
     * multiplicative hashing with arithmetic every engine evaluates
     * identically in BIGINT ((id % P) * A stays < 2^63, so no overflow
@@ -741,15 +735,6 @@ object Corpus {
         explode(sequence(lit(0L), col("n_rep") - 1L)).as("epoch"))
   }
 
-  /** Per-source accounting for [[epochs]]: input docs, emitted rows,
-    * and the effective upsampling ratio — one aggregation. */
-  def epochsReport(docs: DataFrame, epochsPct: Seq[(String, Int)],
-                   defaultPct: Int): DataFrame =
-    epochs(docs, epochsPct, defaultPct)
-      .groupBy(col("source"))
-      .agg(countDistinct(col("doc_id")).as("n_docs"),
-        count(lit(1)).as("n_rows"))
-
   /** The end-to-end TRAINING-MIX MANIFEST — the composed pipeline a
     * data-mix owner actually ships: deterministic weighted sampling
     * ([[sampleWeighted]]) → per-source token budget
@@ -762,11 +747,11 @@ object Corpus {
     *
     * Every stage is the registered scale shape (staged windows, no
     * whole-source partitions). The budget-survivor frame is persisted
-    * ([[CacheTracker]]-tracked — wrap one-shot calls in [[cached]])
-    * because both the interleave ranking and the manifest's token
-    * columns consume it; without the persist the corpus would be
-    * scanned and tokenized twice. CorpusSpec proves the composition ≡
-    * the one-window reference chain. */
+    * ([[CacheTracker]]-tracked — wrap one-shot calls in
+    * [[CacheTracker.scoped]]) because both the interleave ranking and
+    * the manifest's token columns consume it; without the persist the
+    * corpus would be scanned and tokenized twice. CorpusSpec proves
+    * the composition ≡ the one-window reference chain. */
   def trainingMix(docs: DataFrame, ratesPct: Seq[(String, Int)],
                   defaultPct: Int, budget: Long,
                   weights: Seq[(String, Int)], defaultWeight: Int): DataFrame = {

@@ -496,12 +496,6 @@ object Similarity {
     transform(v, x => x.cast("double") / nrm)
   }
 
-  /** Release-on-exit bracket for the operators' internal persists
-    * (the PQ seed frame) — the similarity-family analog of
-    * [[Dedup.cached]]; [[knnBruteForceCached]] remains the dedicated
-    * bracket for over-cap probe caches. */
-  def cached[T](body: => T): T = CacheTracker.scoped(body)
-
   /** One-row (seeds: array<array<double>>) sub-quantizer frame: the
     * kSub smallest mod-selected ids' unit vectors, id-sorted. Seed
     * selection runs through the bounded graft_topk heap (score = −id)
@@ -512,7 +506,7 @@ object Similarity {
     * corpus scans per query (AQE's exchange reuse does not dedupe the
     * two builds). Session-lifetime by contract (repeated queries
     * share one quantizer — exactly what an index wants); wrap
-    * one-shot calls in [[cached]]. */
+    * one-shot calls in [[CacheTracker.scoped]]. */
   private def pqSeeds(e: DataFrame, kSub: Int, seedMod: Int): DataFrame = {
     val ids = e.filter(col("vec_id") % seedMod === 0)
       .agg(Exprs.topK((-col("vec_id")).cast("double"), col("vec_id"), kSub)
@@ -912,12 +906,11 @@ object Similarity {
     * one corpus scan and one set of plane dots instead of paying the
     * projection once per family. That sharing is load-bearing for
     * the PERSISTED store (one bits row per vector serves both
-    * families by shift/mask) and opt-in for the batch path: the r16
-    * BitsCacheProbe A/B measured inline recompute ≤ the materialized
+    * families by shift/mask); the batch path does not share it: the
+    * r16 A/B in SURVEY §6 measured inline recompute ≤ the materialized
     * frame at every probed size (the codegen'd dots are cheaper than
-    * the cache round trip), so the batch default recomputes
-    * (Dedup.semanticBestFrames cacheBits). Output:
-    * (vec_id, v, nrm, bits). */
+    * the cache round trip), so [[Dedup.semanticBestFrames]] recomputes
+    * per family. Output: (vec_id, v, nrm, bits). */
   private[graft] def lshBits(e: DataFrame, nPlanes: Int,
                                  dim: Int): DataFrame = {
     // the sign word is ONE long: `1L << g` wraps mod 64, so a family
@@ -1092,10 +1085,16 @@ object Similarity {
     * bucketed projection instead of paying [[knnGraph]]'s second
     * corpus plane-hash. `edges` should already be persisted by the
     * caller (it is read every iteration). Same quantized, N-scaled,
-    * bit-replayable update as [[knnPagerank]] — see that scaladoc. */
-  private[operators] def pagerankFromEdges(edges: DataFrame, ids: DataFrame,
-                                           iters: Int,
-                                           damping: Double): DataFrame = {
+    * bit-replayable update as [[knnPagerank]] — see that scaladoc.
+    *
+    * Precondition: `edges.src ⊆ ids` — every caller builds its edges
+    * from `ids`. It is not enforced (a filter join would add a join to
+    * every caller's plan). A source outside `ids` still sends rank
+    * along its edges, as a node with no inflow, but gets no output
+    * row: the output is exactly one row per id. */
+  private[graft] def pagerankFromEdges(edges: DataFrame, ids: DataFrame,
+                                       iters: Int,
+                                       damping: Double): DataFrame = {
     // both reused every iteration: persist the slim id frame and the
     // 1-row count so the unrolled plan reads a cached scan instead of
     // re-counting the corpus iters+1 times

@@ -17,11 +17,6 @@ import graft.functions.Text
   */
 object TextAnalysis {
 
-  /** Release-on-exit bracket for the operators' internal persists
-    * ([[search]]'s hit frame) — the text-analysis analog of
-    * [[Dedup.cached]]. Results must be consumed inside the bracket. */
-  def cached[T](body: => T): T = CacheTracker.scoped(body)
-
   /** Stopword vote lists for language ID. Tiny on purpose: the vote
     * count, not the list size, is the operator. */
   val StopwordsByLang: Seq[(String, Seq[String])] = Seq(
@@ -531,8 +526,9 @@ object TextAnalysis {
     * per-doc sum, deterministic top-k (score desc, doc_id asc →
     * TakeOrdered, no global sort). The persist is session-lifetime by
     * [[CacheTracker]] contract — wrap one-shot calls in
-    * [[cached]]. An inverted-index table (the tf frame written
-    * bucketed by term) serves repeated queries without any scan. */
+    * [[CacheTracker.scoped]]. An inverted-index table (the tf frame
+    * written bucketed by term) serves repeated queries without any
+    * scan. */
   def search(docs: DataFrame, terms: Seq[String], k: Int): DataFrame = {
     require(terms.nonEmpty, "search needs at least one query term")
     val tf = CacheTracker.persistTracked(docs

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Similarity, WordCount}
+import graft.operators.{CacheTracker, Similarity, WordCount}
 import graft.sources.Tables
 
 /** Spec coverage for the sketch/ANN paths without SQL oracles. */
@@ -156,7 +156,7 @@ class ApproxAndIvfSpec extends AnyFunSuite {
     val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val old = emb.filter(col("vec_id") % 3 =!= 0)
     val delta = emb.filter(col("vec_id") % 3 === 0)
-    Similarity.cached {
+    CacheTracker.scoped {
       val idx = Similarity.pqIndex(old)
       val grown = Similarity.pqDelta(idx, delta)
       def codes(i: Similarity.PqIndex) = i.codes

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Text
-import graft.operators.{Dedup, TextAnalysis}
+import graft.operators.{CacheTracker, Dedup, TextAnalysis}
 
 /** Grades the §5 unsegmented-script decision END-TO-END: the graded
   * surface keeps reference parity (`[^\p{L}]+` makes a Han sentence
@@ -34,7 +34,7 @@ class CjkPipelineSpec extends AnyFunSuite {
     .toDF("doc_id", "text")
 
   test("dd_ngram_jaccard on Han text: default tokenizer blind, cjkTokens finds the near-dup pair") {
-    val (defPairs, cjkPairs) = Dedup.cached {
+    val (defPairs, cjkPairs) = CacheTracker.scoped {
       // reference parity: each doc is ONE giant run token → zero
       // 3-gram shingles → the pair stage cannot see ANY Han near-dup.
       // This is the documented skew, pinned as operator output.
@@ -51,7 +51,7 @@ class CjkPipelineSpec extends AnyFunSuite {
   }
 
   test("ta_diversity on Han text: default reads one token, cjkTokens reads bigram statistics") {
-    val (defRows, cjkRows) = Dedup.cached {
+    val (defRows, cjkRows) = CacheTracker.scoped {
       val d = TextAnalysis.diversity(docs)
         .as[(Long, Long, Long, Double, Double)].collect()
         .map(r => r._1 -> r).toMap
@@ -78,7 +78,7 @@ class CjkPipelineSpec extends AnyFunSuite {
     val ascii = Seq((1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "the quick brown fox jumps over the lazy cat"),
       (3L, "wholly different words here")).toDF("doc_id", "text")
-    val (a, b) = Dedup.cached {
+    val (a, b) = CacheTracker.scoped {
       val x = Dedup.ngramJaccard(ascii, 3, 0.5)
         .as[(Long, Long, Double)].collect().toSet
       val y = Dedup.ngramJaccard(ascii, 3, 0.5, Text.cjkTokens)

@@ -91,6 +91,34 @@ class ClustersSpec extends AnyFunSuite {
     }
   }
 
+  test("ids that cast to null are ignored on both paths") {
+    // the null filter runs after cast("long"): with ANSI off a
+    // non-numeric string id casts to null and must not reach the
+    // driver fast path's Row.getLong (ANSI on raises instead)
+    val pairs = Seq(("1", "2"), ("x", "3"), ("4", "y"), ("5", "6"))
+      .toDF("id_a", "id_b")
+    val expected = Map(1L -> 1L, 2L -> 1L, 5L -> 5L, 6L -> 5L)
+    val ansi = "spark.sql.ansi.enabled"
+    val oldAnsi = spark.conf.getOption(ansi)
+    spark.conf.set(ansi, "false")
+    try {
+      val fast = Dedup.clusters(pairs).as[(Long, Long)].collect().toMap
+      val key = "graft.clusters.edge.cap"
+      val old = sys.props.get(key)
+      sys.props(key) = "0"
+      val loop = try Dedup.clusters(pairs).as[(Long, Long)].collect().toMap
+        finally old match {
+          case Some(v) => sys.props(key) = v
+          case None => sys.props.remove(key)
+        }
+      assert(fast == expected)
+      assert(loop == fast)
+    } finally oldAnsi match {
+      case Some(v) => spark.conf.set(ansi, v)
+      case None => spark.conf.unset(ansi)
+    }
+  }
+
   test("fast path past the local-relation cap returns identical labels (r21)") {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L))
       .toDF("id_a", "id_b")

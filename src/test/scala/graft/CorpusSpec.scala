@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Corpus
+import graft.operators.{CacheTracker, Corpus}
 
 /** H-family behavior: sampling must be deterministic and
   * partitioning-independent, decontamination must flag exactly the
@@ -259,7 +259,7 @@ class CorpusSpec extends AnyFunSuite {
     val weights = Seq("src0" -> 1, "src1" -> 3)
     val budget = 400L
     // independent reference: every stage in its UNstaged one-window form
-    val refRows = Corpus.cached {
+    val refRows = CacheTracker.scoped {
       val sampled = Corpus.sampleWeighted(docs, rates, 30)
       val kept = Corpus.tokenBudget(sampled, budget)
       Corpus.interleave(kept, weights, 2)
@@ -268,7 +268,7 @@ class CorpusSpec extends AnyFunSuite {
           $"src_rank", $"vt")
         .as[(Long, String, Long, Long, Long, Long)].collect().toSet
     }
-    val mix = Corpus.cached {
+    val mix = CacheTracker.scoped {
       Corpus.trainingMix(docs, rates, 30, budget, weights, 2)
         .as[(Long, String, Long, Long, Long, Long)].collect().toSet
     }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Dedup
+import graft.operators.{CacheTracker, Dedup}
 
 /** Incremental (delta) dedup contracts: a delta pass against the
   * persisted store must equal the full rescan restricted to the delta
@@ -962,7 +962,7 @@ class DeltaDedupSpec extends AnyFunSuite {
     // suite); id-set deltas are immune to concurrent removals of
     // other tests' garbage.
     val beforeIds = sc.getPersistentRDDs.keySet
-    Dedup.cached {
+    CacheTracker.scoped {
       assert(Dedup.exact(docsDF(mine)).count() == mine.size)
       assert(Dedup.minhashLsh(docsDF(mine)).count() >= 1)
       val r = Dedup.exactDelta(
@@ -974,5 +974,18 @@ class DeltaDedupSpec extends AnyFunSuite {
     }
     // and all released on exit
     assert((sc.getPersistentRDDs.keySet -- beforeIds).isEmpty)
+  }
+
+  test("onThread bodies see the caller's SparkContext local properties") {
+    // two calls with different values: a pooled helper thread would
+    // keep the properties it inherited when it was first created
+    val sc = spark.sparkContext
+    val key = "graft.test.onThread"
+    try {
+      for (v <- Seq("first", "second")) {
+        sc.setLocalProperty(key, v)
+        assert(Dedup.onThread(sc.getLocalProperty(key))() == v)
+      }
+    } finally sc.setLocalProperty(key, null)
   }
 }

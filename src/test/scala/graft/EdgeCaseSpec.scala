@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Dedup, TextAnalysis, WordCount}
+import graft.operators.{CacheTracker, Dedup, TextAnalysis, WordCount}
 
 /** Degenerate inputs must not throw: empty corpora, null/empty text,
   * docs shorter than a shingle. */
@@ -180,7 +180,7 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(TextAnalysis.diversity(empty).count() == 0)
     // search: no term hits anywhere → empty result, no throw; empty
     // corpus → empty; empty terms is a contract error
-    TextAnalysis.cached {
+    CacheTracker.scoped {
       assert(TextAnalysis.search(degenerate, Seq("absent"), 5).count() == 0)
       assert(TextAnalysis.search(empty, Seq("absent"), 5).count() == 0)
     }
@@ -229,7 +229,7 @@ class EdgeCaseSpec extends AnyFunSuite {
     val ivf = graft.operators.Similarity.ivfIndex(emb.limit(50))
     assert(graft.operators.Similarity.ivfDelta(ivf, emptyEmb)
       .assigned.count() == ivf.assigned.count())
-    graft.operators.Similarity.cached {
+    graft.operators.CacheTracker.scoped {
       val pq = graft.operators.Similarity.pqIndex(emb.limit(50))
       assert(graft.operators.Similarity.pqDelta(pq, emptyEmb)
         .codes.count() == pq.codes.count())

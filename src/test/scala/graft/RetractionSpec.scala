@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Dedup, Similarity, TextAnalysis}
+import graft.operators.{CacheTracker, Dedup, Similarity, TextAnalysis}
 import graft.sources.Tables
 
 /** r17 — retraction reaching the SERVING-side stores (VERDICT r16
@@ -370,7 +370,7 @@ class RetractionSpec extends AnyFunSuite {
   }
 
   test("keepBestRetract on the real corpus equals a fresh survivor election") {
-    Dedup.cached {
+    CacheTracker.scoped {
       val pairs = Dedup.ngramJaccard(docs, 3, 0.5)
       val store = Dedup.keepBestStore(docs, pairs,
         org.apache.spark.sql.functions.length(col("text")))

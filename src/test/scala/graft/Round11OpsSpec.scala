@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Analytics, AsOf, Corpus, Dedup, Multimodal, Similarity}
+import graft.operators.{Analytics, AsOf, CacheTracker, Corpus, Dedup, Multimodal, Similarity}
 
 /** Round-11 operators: hand-computed semantics + degenerate inputs for
   * the as-of tolerance dial, value histograms, frame-fingerprint media
@@ -71,7 +71,7 @@ class Round11OpsSpec extends AnyFunSuite {
     val variant = "X" * 52 + base.drop(52)
     val docs = Seq((1L, base), (2L, variant), (3L, "entirely different " * 20))
       .toDF("doc_id", "text")
-    val pairs = Dedup.cached {
+    val pairs = CacheTracker.scoped {
       Multimodal.payloadNearDup(docs, tau = 0.5, frameLen = 52, stride = 52)
         .as[(Long, Long, Double)].collect().toSeq
     }
@@ -87,12 +87,12 @@ class Round11OpsSpec extends AnyFunSuite {
     // {x, y} the Jaccard is 1.0 — multiset counting would dilute it
     val items = Seq((1L, "x"), (1L, "x"), (1L, "x"), (1L, "y"),
       (2L, "x"), (2L, "y")).toDF("doc_id", "s")
-    val pairs = Dedup.cached {
+    val pairs = CacheTracker.scoped {
       Dedup.jaccardPairsOf(items, 0.9).as[(Long, Long, Double)].collect().toSeq
     }
     assert(pairs == Seq((1L, 2L, 1.0)))
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "s")
-    assert(Dedup.cached(Dedup.jaccardPairsOf(empty, 0.5).count()) == 0L)
+    assert(CacheTracker.scoped(Dedup.jaccardPairsOf(empty, 0.5).count()) == 0L)
   }
 
   test("dupAttributionOf: per source-pair counts, diagonal self-duplication") {
@@ -119,14 +119,14 @@ class Round11OpsSpec extends AnyFunSuite {
       (3L, "completely disjoint text with zero witness material here", "books"),
     ).toDF("doc_id", "text", "source")
     val ev = Seq((100L, evalDoc)).toDF("doc_id", "text")
-    val r = Dedup.cached {
+    val r = CacheTracker.scoped {
       Corpus.contaminationReport(train, ev, 4, 3, 0.8)
         .as[(String, Long, Long, Long, Long)].collect().map(x => x._1 -> x).toMap
     }
     assert(r("web") == (("web", 2L, 2L, 1L, 2L))) // 2 docs, 2 exact, 1 fuzzy, 2 flagged
     assert(r("books") == (("books", 1L, 0L, 0L, 0L)))
     // empty eval set: every source reports zeros, no throw
-    val z = Dedup.cached {
+    val z = CacheTracker.scoped {
       Corpus.contaminationReport(train,
         Seq.empty[(Long, String)].toDF("doc_id", "text"), 4, 3, 0.8)
         .as[(String, Long, Long, Long, Long)].collect().map(x => x._1 -> x).toMap
@@ -150,7 +150,7 @@ class Round11OpsSpec extends AnyFunSuite {
       (13L, clean, "books"),  // byte copy of a clean doc
     ).toDF("doc_id", "text", "source")
     val ev = Seq((100L, evalDoc)).toDF("doc_id", "text")
-    val r = Dedup.cached {
+    val r = CacheTracker.scoped {
       Corpus.contaminationReport(train, ev, 4, 3, 0.8)
         .as[(String, Long, Long, Long, Long)].collect().map(x => x._1 -> x).toMap
     }
@@ -190,7 +190,7 @@ class Round11OpsSpec extends AnyFunSuite {
     val streamed = spark.read.parquet(out)
       .select("doc_id", "n_matches", "max_jaccard", "first_eval_id")
       .as[(Long, Long, Double, Long)].collect().toSet
-    val batch = Dedup.cached {
+    val batch = CacheTracker.scoped {
       Corpus.decontaminateFuzzy(trainRows.toDF("doc_id", "text"), evalDocs,
         3, 0.8).as[(Long, Long, Double, Long)].collect().toSet
     }
@@ -214,7 +214,7 @@ class Round11OpsSpec extends AnyFunSuite {
       (4L, "wholly unrelated words that share nothing with the others " * 3),
       (5L, "ab"), (6L, "ab"), (7L, null.asInstanceOf[String]),
     ).toDF("doc_id", "text")
-    val (composed, raw) = Dedup.cached {
+    val (composed, raw) = CacheTracker.scoped {
       val c = Corpus.nearDupAssignment(docs, 3, 0.8)
         .as[(Long, Long, Int)].collect().map(x => x._1 -> x._2).toMap
       val r = Dedup.clusters(Dedup.ngramJaccard(docs, 3, 0.8))
@@ -250,7 +250,7 @@ class Round11OpsSpec extends AnyFunSuite {
   test("knnPagerank: mass bounded, hubs outrank leaves, isolates at teleport floor") {
     val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val n = emb.count()
-    val ranks = Dedup.cached {
+    val ranks = CacheTracker.scoped {
       Similarity.knnPagerank(emb, 10).as[(Long, Double)].collect().toMap
     }
     assert(ranks.size == n) // every node ranked, pairless ones included

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Analytics, Corpus, Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.operators.{Analytics, CacheTracker, Corpus, Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.sources.Tables
 
 /** Scale-shape checks: transformations that exist purely for cluster
@@ -173,7 +173,7 @@ class ScaleShapeSpec extends AnyFunSuite {
   }
 
   test("search tokenizes the corpus once: both branches read the cached hit frame") {
-    TextAnalysis.cached {
+    CacheTracker.scoped {
       val df = TextAnalysis.search(Tables.documents(spark, d),
         Seq("spark", "stream"), 10)
       val plan = df.queryExecution.executedPlan.toString
@@ -247,7 +247,7 @@ class ScaleShapeSpec extends AnyFunSuite {
     assert(!ivfPlan.contains("Exchange hashpartitioning"),
       s"ivfDelta shuffles:\n$ivfPlan")
     assert(!ivfPlan.contains("Window"), s"ivfDelta windows:\n$ivfPlan")
-    Similarity.cached {
+    CacheTracker.scoped {
       val pq = Similarity.pqDelta(Similarity.pqIndex(old), delta)
       val pqPlan = pq.codes.queryExecution.executedPlan.toString
       assert(!pqPlan.contains("Exchange hashpartitioning"),

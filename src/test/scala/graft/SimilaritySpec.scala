@@ -353,4 +353,22 @@ class SimilaritySpec extends AnyFunSuite {
     // topK caps the report
     assert(Similarity.outliers(emb, centroidMod = 2, topK = 2).count() == 2)
   }
+
+  test("pagerankFromEdges: a source outside ids gets no row, one row per id") {
+    // edges.src ⊆ ids is a documented precondition, not a filter: pin
+    // what one dangling source (99 → 1) does to the output today
+    val ids = Seq(1L, 2L, 3L).toDF("vec_id")
+    val inIds = Seq((1L, 2L), (2L, 1L), (3L, 1L))
+    def ranks(edges: Seq[(Long, Long)]): Map[Long, Double] = {
+      val rows = Similarity.pagerankFromEdges(edges.toDF("src", "dst"), ids,
+        iters = 3, damping = 0.85).as[(Long, Double)].collect()
+      assert(rows.map(_._1).sorted.toSeq == Seq(1L, 2L, 3L))
+      rows.toMap
+    }
+    val clean = ranks(inIds)
+    val dangling = ranks(inIds :+ (99L -> 1L))
+    // the stray source never appears, but its rank still flows to 1
+    assert(dangling(1L) > clean(1L))
+    assert(dangling(3L) == clean(3L))
+  }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.CacheTracker
 import graft.streaming.Streams
 import graft.streaming.Streams.SessionEvent
 
@@ -165,7 +166,7 @@ class StreamsSpec extends AnyFunSuite {
     val served = graft.operators.TextAnalysis.searchIndexed(
       spark.read.parquet(postingsDir), nDocs, terms, 10)
       .as[(Long, Long, Long)].collect().toSet
-    val batchRes = graft.operators.TextAnalysis.cached {
+    val batchRes = graft.operators.CacheTracker.scoped {
       graft.operators.TextAnalysis.search(
         (b1 ++ b2).toDF("doc_id", "text"), terms, 10)
         .as[(Long, Long, Long)].collect().toSet
@@ -180,7 +181,7 @@ class StreamsSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     val root = java.nio.file.Files.createTempDirectory("sts_paths")
     val (p, n) = (s"$root/postings", s"$root/counts")
-    val batchRes = TextAnalysis.cached {
+    val batchRes = CacheTracker.scoped {
       TextAnalysis.search(graft.sources.Tables.documents(spark, dir),
         SearchTerms, SearchK).as[(Long, Long, Long)].collect().toSet
     }
@@ -221,7 +222,7 @@ class StreamsSpec extends AnyFunSuite {
     val servedRetract = TextAnalysis.searchIndexed(shrunk.postings,
       shrunk.docIds.count(), SearchTerms, SearchK)
       .as[(Long, Long, Long)].collect().toSet
-    val batchSurv = TextAnalysis.cached {
+    val batchSurv = CacheTracker.scoped {
       TextAnalysis.search(graft.sources.Tables.documents(spark, dir)
           .filter(org.apache.spark.sql.functions.col("doc_id") % 7 =!= 0),
         SearchTerms, SearchK).as[(Long, Long, Long)].collect().toSet
@@ -465,7 +466,7 @@ class StreamsSpec extends AnyFunSuite {
       graft.operators.TextAnalysis.lmModelFromCounts(
         spark.read.parquet(countsDir).select("bigram", "c12")))
       .as[(Long, Long, Long)].collect().toSet
-    val batchRes = graft.operators.TextAnalysis.cached {
+    val batchRes = graft.operators.CacheTracker.scoped {
       graft.operators.TextAnalysis.lmScore(allDocs)
         .as[(Long, Long, Long)].collect().toSet
     }
@@ -493,7 +494,7 @@ class StreamsSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     val root = java.nio.file.Files.createTempDirectory("st_lm_path")
     val countsDir = s"$root/counts"
-    val batchRes = graft.operators.TextAnalysis.cached {
+    val batchRes = graft.operators.CacheTracker.scoped {
       graft.operators.TextAnalysis.lmScore(
         graft.sources.Tables.documents(spark, dir))
         .as[(Long, Long, Long)].collect().toSet

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.TextAnalysis
+import graft.operators.{CacheTracker, TextAnalysis}
 
 /** Behavior checks for text-analysis shapes that exist for scale
   * safety (the co-occurrence vocabulary cap). */
@@ -162,7 +162,7 @@ class TextAnalysisSpec extends AnyFunSuite {
   test("lmScoreIndexed over a persisted model == lmScore; OOV bigrams drop") {
     import spark.implicits._
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-    val fresh = TextAnalysis.cached {
+    val fresh = CacheTracker.scoped {
       TextAnalysis.lmScore(docs).as[(Long, Long, Long)].collect().toSet
     }
     val dir = java.nio.file.Files.createTempDirectory("lm_model").toString
@@ -188,7 +188,7 @@ class TextAnalysisSpec extends AnyFunSuite {
   test("searchIndexed over a persisted postings index == search on the corpus") {
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
     val terms = Seq("spark", "stream", "vector")
-    val fresh = TextAnalysis.cached {
+    val fresh = CacheTracker.scoped {
       TextAnalysis.search(docs, terms, 25).collect().map(_.toSeq).toSet
     }
     val nDocs = docs.count()
